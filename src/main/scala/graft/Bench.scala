@@ -274,6 +274,13 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "bench_prior.json"))
     val stagePrior = priorStages(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "bench_prior.json"))
+    // the table catalog's one-time cost, as the flat map's "catalog"
+    // entry: registering the SQL views on the fresh catalog infers every
+    // table's schema, and every later read reuses it, so the min-of-2
+    // query lines would otherwise never show it
+    val catalogT0 = System.nanoTime()
+    Sql.register(spark, sfDir)
+    val catalogSec = (System.nanoTime() - catalogT0) / 1e9
     // memoized shared stages (shingle set, MinHash estimates, SimHash
     // sketch, ngram pairs, PPJoin pairs) are built and timed ONCE up front
     // as their own ledger lines: previously whichever dedup-family query
@@ -347,7 +354,7 @@ object Bench {
             best.taskCpuMs, best.taskGcMs, best.gcDelta, retried))
         }
       }
-    val shared = stageResults.map(r => (r.name, r.sec))
+    val shared = ("catalog", catalogSec) +: stageResults.map(r => (r.name, r.sec))
     // block-manager snapshot right after prewarm: the r8 ledger showed the
     // first post-prewarm queries inflated on unchanged code, so the ledger
     // now records how much storage the prewarm actually pinned
@@ -425,7 +432,7 @@ object Bench {
     val sharedJson = jsonMap(shared)
     val sentinelsJson =
       s"""{"start":$sentStart,"mid":$sentMid,"end":$sentEnd}"""
-    // headline total = min per query + shared-stage builds, so it
+    // headline total = min per query + catalog and shared-stage builds, so it
     // stays comparable with rounds where the builds hid inside query lines
     val total = results.collect { case r if r.ok => r.sec }.sum +
       shared.map(_._2).sum

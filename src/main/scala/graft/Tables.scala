@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Central table catalog over the driver-provided parquet directories
   * (`/root/repo/TESTDATA.md`).
@@ -12,10 +16,81 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cluster they stay far below the broadcast threshold even at 1000x the
   * test scale factors (region/nation are constant-size in TPC-H-style
   * schemas).
+  *
+  * Schema catalog: a plain `spark.read.parquet` launches one
+  * schema-inference Spark job per call. [[table]] resolves each table's
+  * schema once instead, the way a metastore does, under this contract:
+  *
+  *  - KEY. One JVM-wide entry per table path read, holding the path's
+  *    [[Stamp]] and the `StructType` inferred under it. A stamp is the
+  *    file fingerprint (one recursive listing: each file's path, length
+  *    and modification time) plus the values of the
+  *    [[inferenceConfs]] in force, so a session that reads `events` with
+  *    `nanosAsLong` on and one that reads it with the flag off never share
+  *    a schema.
+  *  - HIT. The call's stamp equals the entry's: the read is
+  *    `spark.read.schema(cached).parquet(path)`, which launches no job and
+  *    plans exactly like the inferring read.
+  *  - MISS (no entry, or a different fingerprint or conf values): the
+  *    inferring read itself is returned and its schema replaces the entry.
+  *    The stamp is taken BEFORE that read, so a directory rewritten
+  *    mid-call can only leave an entry that the next call misses — a
+  *    rewritten file set is never served a stale schema.
+  *  - BOUND. At most one entry per distinct table path ever read (a
+  *    schema and a file list each); a path that cannot be listed is read
+  *    with inference and not cached.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Read TIMESTAMP(NANOS) as a long; see [[events]]. */
+  private[graft] val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** The parquet confs that change what schema inference returns. */
+  private val inferenceConfs = Seq(
+    NanosAsLong,
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  /** A table path's file fingerprint (sorted `(path, length, mtime)` of
+    * its files) and the [[inferenceConfs]] values of one session. */
+  private[graft] final case class Stamp(files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  private final case class Entry(stamp: Stamp, schema: StructType)
+  private val entries = new ConcurrentHashMap[String, Entry]()
+
+  private[graft] def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
+  /** The stamp a read of `path` in `spark` would infer under, or None when
+    * the path cannot be listed (the inferring read then reports why).
+    * Every file counts, `_SUCCESS` and checksums included: a file Spark
+    * would skip can only make a rewrite look more changed, never less.
+    * The walk uses plain `listStatus`, not `listFiles`: on the local
+    * filesystem `listFiles` builds a `LocatedFileStatus` per file, which
+    * loads its permissions by forking a shell (about 5 ms a file). */
+  private[graft] def stamp(spark: SparkSession, path: String): Option[Stamp] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def walk(f: FileStatus): Seq[FileStatus] =
+        if (f.isDirectory) fs.listStatus(f.getPath).toSeq.flatMap(walk) else Seq(f)
+      val files = walk(fs.getFileStatus(p))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      Some(Stamp(files.sorted, inferenceConfs.map(spark.conf.getOption)))
+    } catch { case _: java.io.IOException => None }
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val p = path(dir, name)
+    val st = stamp(spark, p)
+    Option(entries.get(p)).filter(e => st.contains(e.stamp)) match {
+      case Some(e) => spark.read.schema(e.schema).parquet(p)
+      case None =>
+        val df = spark.read.parquet(p)
+        st.foreach(s => entries.put(p, Entry(s, df.schema)))
+        df
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")
@@ -55,7 +130,7 @@ object Tables {
     * method, which immediately normalizes to TimestampType — the flag is
     * therefore observable only as a no-op to the rest of the catalog. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    s.conf.set(NanosAsLong, "true")
     normalizeEventTs(table(s, d, "events"))
   }
 

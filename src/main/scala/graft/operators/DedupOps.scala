@@ -244,23 +244,22 @@ object DedupOps {
   private val estCacheHooked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
 
-  /** Evict every cached estimate of `spark` when its SparkContext ends,
+  /** Drop every cached estimate of `spark` when its SparkContext ends,
     * bounding the cache to the APPLICATION's lifetime (a best-effort
     * backstop: sessions closed mid-application stay cached until the app
     * ends — acceptable here because the cache holds one tiny pair-score
-    * DataFrame per (session, dir), and unpersisting after the context
-    * stops frees nothing anyway). Data under `dir` is
-    * assumed immutable for the session — rewriting the parquet mid-session
-    * would serve stale estimates (the same contract as Spark's own
-    * relation cache). */
+    * DataFrame per (session, dir)). The entries are dropped, not
+    * unpersisted: the context is stopping, so an unpersist frees nothing
+    * and only fails noisily against the stopped block manager. Data
+    * under `dir` is assumed immutable for the session — rewriting the
+    * parquet mid-session would serve stale estimates (the same contract
+    * as Spark's own relation cache). */
   private def hookEviction(spark: SparkSession): Unit =
     if (estCacheHooked.add(spark)) {
       spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          estCache.keys.filter(_._1 eq spark).foreach { k =>
-            estCache.remove(k).foreach(df => df.unpersist(blocking = false))
-          }
+          estCache.keys.filter(_._1 eq spark).foreach(estCache.remove)
           // swept independently of estCache: a FAILED build leaves a lock
           // entry with no cache entry, which would otherwise pin the
           // stopped session in this static map for the JVM lifetime
