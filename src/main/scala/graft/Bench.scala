@@ -389,7 +389,11 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
+          catch { case scala.util.control.NonFatal(e) =>
+            System.err.println(
+              s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+            false
+          }
         val sec = (System.nanoTime() - t0) / 1e9
         // listener delivery is async; give stragglers a moment so the
         // per-run split stays attributable (same caveat as peak_mem)

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
+import scala.util.control.NonFatal
+
 /** Plan-audit helper: `Explain [sfDir] [outDir] [query...]`. With no query
   * names it dumps `explain("formatted")` for every registered query to
   * <outDir>/<name>.txt so scan pushdown (`PushedFilters`, `ReadSchema`),
@@ -25,7 +27,7 @@ object Explain {
     spark.sparkContext.setLogLevel("WARN")
     def plan(name: String): String =
       try SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
-      catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
+      catch { case NonFatal(e) => s"ERROR: ${e.getMessage}" }
     if (names.nonEmpty) names.foreach(n => println(s"===== $n =====\n${plan(n)}"))
     else {
       Files.createDirectories(Paths.get(outDir))

@@ -174,16 +174,7 @@ object EventOps {
     * deviation scaling and the shard parameters — still a 5-row
     * broadcast, no extra corpus pass. */
   def eventsCusumChangepoint(spark: SparkSession, dir: String): DataFrame =
-    eventsCusumSharded(spark, dir, CusumRowsPerShard)
-
-  /** Prefix-scan row budget per (type, time-bucket) shard; same 64k
-    * rationale as [[RollingRowsPerShard]]. */
-  private val CusumRowsPerShard = 65536L
-
-  /** Floor on shards per type, so the carry composition runs at every
-    * scale (incl. the sf0.01 oracle gate) instead of degenerating to
-    * one bucket below 64k rows/type. */
-  private val CusumMinShardsPerType = 8L
+    eventsCusumSharded(spark, dir, RangeShards.RowsPerShard)
 
   /** The sharded scan body; `rowsPerShard` is a parameter only so the
     * spec can force 1-row shards and pin carry composition against the
@@ -196,21 +187,11 @@ object EventOps {
       .select($"event_id", $"event_type", $"ts",
         ($"value".cast(Dec) * 100).cast("long").as("c"),
         unix_micros($"ts").as("tsu"))
-    val typ = ev.groupBy($"event_type")
-      .agg(count(lit(1)).as("n"), sum($"c").as("s"),
-        min($"tsu").as("t_lo"), max($"tsu").as("t_hi"))
-      .select($"event_type", $"n", $"s", $"t_lo", $"t_hi",
-        greatest(lit(CusumMinShardsPerType),
-          expr(s"(n + ${rowsPerShard - 1}) div $rowsPerShard")).as("nb"))
-    // bucket is a monotone non-decreasing function of tsu (uniform map
-    // of the type's time span onto nb buckets, same construction as the
-    // rolling detector's — equal timestamps always share a bucket, so a
-    // boundary can never split a tie group the ordering resolves by
-    // event_id); exact bucket sizes are a performance knob only
-    val dev = ev.join(broadcast(typ), "event_type")
-      .withColumn("bucket",
-        least($"nb" - 1, floor(($"tsu" - $"t_lo").cast("double") /
-          ($"t_hi" - $"t_lo" + 1).cast("double") * $"nb").cast("long")))
+    // (type, time-bucket) shards; the type's sum(c) rides the same
+    // per-type aggregate as the shard parameters
+    val (bucketed, _) = RangeShards.rangeSharded(ev, "event_type", "tsu",
+      descending = false, rowsPerShard, sum($"c").as("s"))
+    val dev = bucketed
       .select($"event_id", $"event_type", $"bucket", $"ts",
         ($"n".cast("decimal(38,0)") * $"c" - $"s").as("d"))
     val wLoc = Window.partitionBy($"event_type", $"bucket")
@@ -890,7 +871,7 @@ object EventOps {
     * at cluster scale. The frame is BOUNDED (trailing 50 rows), so the
     * window shards exactly: rows split into (type, time-bucket) ranges
     * — bucket count per type follows ⌈n_type / 64k⌉ with a floor of
-    * [[RollingMinShardsPerType]] so the carry path is exercised at
+    * [[RangeShards.MinShardsPerKey]] so the carry path is exercised at
     * every scale — and each shard's first rows see their true trailing
     * history through a CARRY of the ≤ 50 rows that precede the shard.
     * The carry construction is exact (see the in-body lemma comments);
@@ -902,19 +883,7 @@ object EventOps {
     * the type alphabet. The streaming twin's bounded 50-value state is
     * untouched. */
   def eventsRollingAnomaly(spark: SparkSession, dir: String): DataFrame =
-    eventsRollingAnomalySharded(spark, dir, RollingRowsPerShard)
-
-  /** Trailing-frame row budget per (type, time-bucket) shard. 64k rows
-    * sort in ~ms and amortize the ≤ 50·(shards) carry rows to noise;
-    * at sf10 (2M rows/type) it yields ~31 shards/type = 155 tasks where
-    * the unsharded window had 5. */
-  private val RollingRowsPerShard = 65536L
-
-  /** Floor on shards per type: keeps the carry machinery on the hot
-    * path (and under the sf0.01 oracle gate) at every scale instead of
-    * degenerating to one bucket below 64k rows/type, and bounds small-n
-    * latency by cores/type rather than 1. */
-  private val RollingMinShardsPerType = 8L
+    eventsRollingAnomalySharded(spark, dir, RangeShards.RowsPerShard)
 
   /** The sharded window body; `rowsPerShard` is a parameter only so the
     * spec can force many tiny shards on the 1k-row fixture and pin the
@@ -926,22 +895,11 @@ object EventOps {
       .select($"event_id", $"ts", $"event_type", $"value",
         expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("c"),
         unix_micros($"ts").as("tsu"))
-    // per-type shard parameters: a 5-row broadcast. Bucketing maps the
-    // type's time span uniformly onto nb buckets in DOUBLE (monotone
-    // non-decreasing in tsu, so the (ts, event_id) order is respected;
-    // equal timestamps always share a bucket — a boundary can never
-    // split the tie-group the ordering resolves by event_id). Exact
-    // bucket SIZES don't matter for correctness, only that every row
-    // gets one bucket and buckets order by time.
-    val params = ev.groupBy($"event_type")
-      .agg(count(lit(1)).as("n_ty"), min($"tsu").as("t_lo"), max($"tsu").as("t_hi"))
-      .select($"event_type", $"t_lo", $"t_hi",
-        greatest(lit(RollingMinShardsPerType),
-          expr(s"(n_ty + ${rowsPerShard - 1}) div $rowsPerShard")).as("nb"))
-    val withB = ev.join(broadcast(params), "event_type")
-      .withColumn("bucket",
-        least($"nb" - 1, floor(($"tsu" - $"t_lo").cast("double") /
-          ($"t_hi" - $"t_lo" + 1).cast("double") * $"nb").cast("long")))
+    // (type, time-bucket) shards: buckets order by tsu, so the
+    // (ts, event_id) order runs bucket after bucket
+    val (bucketed, bcount) = RangeShards.rangeSharded(ev, "event_type", "tsu",
+      descending = false, rowsPerShard)
+    val withB = bucketed
       .select($"event_type", $"bucket", $"ts", $"event_id", $"value", $"c")
     // Per-shard tails: a row of bucket k can sit in the trailing-50
     // frame of a LATER bucket's row only if < 50 rows follow it in the
@@ -960,17 +918,13 @@ object EventOps {
         $"ts", $"event_id", $"c")
     // Which source buckets must carry into which target buckets: src
     // carries into tgt iff fewer than 50 rows sit strictly between them
-    // (otherwise nothing in src can reach tgt's frame). Cumulative
-    // bucket counts make that a bucket-level predicate; the whole table
-    // is |types|·|buckets| rows — broadcast-sized by construction.
-    val wCum = Window.partitionBy($"event_type").orderBy($"bucket".asc)
-    val bcum = withB.groupBy($"event_type", $"bucket")
-      .agg(count(lit(1)).as("bn"))
-      .withColumn("cum", sum($"bn").over(wCum)) // inclusive prefix count
-    val pairs = bcum.select($"event_type", $"bucket".as("src_bucket"),
-        $"cum".as("cum_src"))
-      .join(bcum.select($"event_type", $"bucket".as("tgt_bucket"),
-        ($"cum" - $"bn").as("cum_before")), Seq("event_type"))
+    // (otherwise nothing in src can reach tgt's frame). The bucket
+    // counts make that a bucket-level predicate; the whole table is
+    // |types|·|buckets| rows — broadcast-sized by construction.
+    val pairs = bcount.select($"event_type", $"bucket".as("src_bucket"),
+        ($"off" + $"cb").as("cum_src"))
+      .join(bcount.select($"event_type", $"bucket".as("tgt_bucket"),
+        $"off".as("cum_before")), Seq("event_type"))
       .filter($"src_bucket" < $"tgt_bucket" &&
         $"cum_before" - $"cum_src" < 50)
       .select($"event_type", $"src_bucket", $"tgt_bucket")

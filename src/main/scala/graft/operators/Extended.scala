@@ -345,16 +345,6 @@ object Extended {
     """SELECT r_name, n_name FROM region CROSS JOIN nation
       |ORDER BY r_name, n_name""".stripMargin
 
-  /** Rank budget per (key, value-bucket) shard in the sharded-window
-    * restatements (ntile, percent_rank, cume_dist); same 64k rationale
-    * as the event scans'. */
-  private val NtileRowsPerShard = 65536L
-
-  /** Floor on shards per key, so the rank-carry path is exercised at
-    * every scale (incl. the sf0.01 oracle gate) instead of
-    * degenerating to one bucket below 64k rows/key. */
-  private val NtileMinShardsPerKey = 8L
-
   /** NTILE window function: revenue quartiles of orders per order
     * priority (even-split buckets, earlier buckets larger on remainder —
     * identical SQL-standard semantics on both engines).
@@ -363,19 +353,16 @@ object Extended {
     * window (`ntile(4) OVER (PARTITION BY priority ORDER BY price DESC,
     * key)`) sorts each priority's full stream on ONE task — the same
     * bounded-cardinality parallelism floor the event scans shed in r16.
-    * Restated as a two-level scan: the global per-priority row_number
-    * comes from (priority, price-bucket) shards — bucket is a monotone
-    * non-decreasing function of DESCENDING price (equal prices always
-    * share a bucket, so a boundary can never split a tie group the
-    * ordering resolves by orderkey), each shard sorts locally, and a
-    * tiny bucket-summary carry supplies the count of rows in earlier
-    * buckets — and the tile is then pure integer arithmetic on
-    * (rank, n): SQL-standard NTILE gives the first n mod 4 tiles
-    * ceil(n/4) rows and the rest floor(n/4). Bit-identical to the plain
-    * window (spec-pinned down to 1-row shards); the oracle keeps the
-    * textbook SQL. */
+    * Restated as a two-level scan over [[RangeShards]] on
+    * (priority, descending-price bucket): the global per-priority
+    * row_number is a shard-local row_number plus the bucket's carry,
+    * and the tile is then pure integer arithmetic on (rank, n):
+    * SQL-standard NTILE gives the first n mod 4 tiles ceil(n/4) rows
+    * and the rest floor(n/4). Bit-identical to the plain window
+    * (spec-pinned down to 1-row shards); the oracle keeps the textbook
+    * SQL. */
   def windowNtileQuartiles(spark: SparkSession, dir: String): DataFrame =
-    windowNtileSharded(spark, dir, NtileRowsPerShard)
+    windowNtileSharded(spark, dir, RangeShards.RowsPerShard)
 
   /** The sharded body; `rowsPerShard` is a parameter only so the spec
     * can force tiny shards and pin rank-carry composition against the
@@ -385,31 +372,10 @@ object Extended {
     import spark.implicits._
     val ord = Tables.orders(spark, dir)
       .select($"o_orderpriority", $"o_orderkey", $"o_totalprice")
-    val keyStats = ord.groupBy($"o_orderpriority")
-      .agg(count(lit(1)).as("n"),
-        min($"o_totalprice").as("v_lo"), max($"o_totalprice").as("v_hi"))
-      .select($"o_orderpriority", $"n", $"v_lo", $"v_hi",
-        greatest(lit(NtileMinShardsPerKey),
-          expr(s"(n + ${rowsPerShard - 1}) div $rowsPerShard")).as("nb"))
-    // bucket sizes are a performance knob only: the decimal difference
-    // is exact, its double cast order-preserving, and equal prices land
-    // in the same bucket by construction
-    val bucketed = ord.join(broadcast(keyStats), "o_orderpriority")
-      .withColumn("bucket",
-        when($"v_hi" === $"v_lo", lit(0L)).otherwise(
-          least($"nb" - 1,
-            floor(($"v_hi" - $"o_totalprice").cast("double") /
-              ($"v_hi" - $"v_lo").cast("double") * $"nb").cast("long"))))
+    val (bucketed, carry) = RangeShards.rangeSharded(ord, "o_orderpriority",
+      "o_totalprice", descending = true, rowsPerShard)
     val wLoc = Window.partitionBy($"o_orderpriority", $"bucket")
       .orderBy($"o_totalprice".desc, $"o_orderkey".asc)
-    val wPrev = Window.partitionBy($"o_orderpriority").orderBy($"bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // bucket summary rides the shard partitioning (map-side partials,
-    // |priorities|·|buckets| rows): off = rows in all earlier buckets
-    val carry = bucketed.groupBy($"o_orderpriority", $"bucket")
-      .agg(count(lit(1)).as("cb"))
-      .withColumn("off", coalesce(sum($"cb").over(wPrev), lit(0L)))
-      .select($"o_orderpriority", $"bucket", $"off")
     // ceil(a/b) = (a + b - 1) div b on positive longs; the untaken CASE
     // branch is never evaluated, so n < 4 (q = 0) cannot divide by zero
     val ranked = bucketed
@@ -577,7 +543,7 @@ object Extended {
     * doubles — (rank-1)/(n-1) and rows≤current/n — so the values are
     * bit-equal across engines given the same total window order. */
   def windowPercentRank(spark: SparkSession, dir: String): DataFrame =
-    windowPercentRankSharded(spark, dir, NtileRowsPerShard)
+    windowPercentRankSharded(spark, dir, RangeShards.RowsPerShard)
 
   /** r17: `c_nationkey` is a 25-value alphabet, so the textbook window
     * sorted each nation's customers on one task — the same
@@ -585,37 +551,21 @@ object Extended {
     * table. The window's (acctbal, custkey) order is TOTAL, so both
     * functions are row-number arithmetic: percent_rank = (rn−1)/(n−1)
     * (0 when n = 1, as Spark defines it) and cume_dist = rn/n — the
-    * global rn comes from the same (key, value-bucket) two-level scan
-    * as the ntile rework (equal balances share a bucket; ties inside a
-    * bucket resolve by custkey). Divisions are the identical IEEE
-    * double ops Spark's PercentRank/CumeDist evaluate, so the output
-    * is bit-identical (spec-pinned down to 1-row shards). The oracle
-    * keeps the textbook window SQL. */
+    * global rn comes from the same [[RangeShards]] two-level scan as
+    * the ntile rework (ties inside a bucket resolve by custkey).
+    * Divisions are the identical IEEE double ops Spark's
+    * PercentRank/CumeDist evaluate, so the output is bit-identical
+    * (spec-pinned down to 1-row shards). The oracle keeps the textbook
+    * window SQL. */
   private[graft] def windowPercentRankSharded(
       spark: SparkSession, dir: String, rowsPerShard: Long): DataFrame = {
     import spark.implicits._
     val cust = Tables.customer(spark, dir)
       .select($"c_nationkey", $"c_custkey", $"c_acctbal")
-    val keyStats = cust.groupBy($"c_nationkey")
-      .agg(count(lit(1)).as("n"),
-        min($"c_acctbal").as("v_lo"), max($"c_acctbal").as("v_hi"))
-      .select($"c_nationkey", $"n", $"v_lo", $"v_hi",
-        greatest(lit(NtileMinShardsPerKey),
-          expr(s"(n + ${rowsPerShard - 1}) div $rowsPerShard")).as("nb"))
-    val bucketed = cust.join(broadcast(keyStats), "c_nationkey")
-      .withColumn("bucket",
-        when($"v_hi" === $"v_lo", lit(0L)).otherwise(
-          least($"nb" - 1,
-            floor(($"c_acctbal" - $"v_lo").cast("double") /
-              ($"v_hi" - $"v_lo").cast("double") * $"nb").cast("long"))))
+    val (bucketed, carry) = RangeShards.rangeSharded(cust, "c_nationkey",
+      "c_acctbal", descending = false, rowsPerShard)
     val wLoc = Window.partitionBy($"c_nationkey", $"bucket")
       .orderBy($"c_acctbal".asc, $"c_custkey".asc)
-    val wPrev = Window.partitionBy($"c_nationkey").orderBy($"bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = bucketed.groupBy($"c_nationkey", $"bucket")
-      .agg(count(lit(1)).as("cb"))
-      .withColumn("off", coalesce(sum($"cb").over(wPrev), lit(0L)))
-      .select($"c_nationkey", $"bucket", $"off")
     bucketed
       .withColumn("rn_loc", row_number().over(wLoc))
       .join(broadcast(carry), Seq("c_nationkey", "bucket"))
@@ -1237,19 +1187,19 @@ object Extended {
     * rational of two ints, so the doubles agree bit-for-bit across
     * engines with no rounding dance.
     *
-    * Scale: one hash-partitioned window sort per segment — the same
-    * shape as every other ranking window here; no global sort. */
+    * Scale: sharded on (segment, balance-bucket) through
+    * [[RangeShards]], so the window sorts run on shards whose count
+    * grows with the data, then one global presentation sort. */
   def windowCumeDist(spark: SparkSession, dir: String): DataFrame =
-    windowCumeDistSharded(spark, dir, NtileRowsPerShard)
+    windowCumeDistSharded(spark, dir, RangeShards.RowsPerShard)
 
   /** r17: `c_mktsegment` is a 5-value alphabet — same bounded-alphabet
     * window floor as [[windowNtileSharded]] / the percent_rank pair.
     * This order (acctbal only) HAS ties, and cume_dist counts every
-    * peer: count(rows with bal ≤ current) / n. The bucket is a function
-    * of the VALUE alone, so an entire tie group always lands in one
-    * bucket and the local ordered count over the default RANGE frame
-    * (unbounded preceding → current row, peers included) plus the
-    * earlier-bucket carry is exactly the global ≤-count. The division
+    * peer: count(rows with bal ≤ current) / n. A tie group never spans
+    * two buckets, so the local ordered count over the default RANGE
+    * frame (unbounded preceding → current row, peers included) plus
+    * the earlier-bucket carry is exactly the global ≤-count. The division
     * is the same IEEE double op Spark's CumeDist evaluates —
     * bit-identical, spec-pinned down to 1-row shards. Oracle keeps the
     * textbook window SQL. */
@@ -1258,28 +1208,12 @@ object Extended {
     import spark.implicits._
     val cust = Tables.customer(spark, dir)
       .select($"c_mktsegment", $"c_custkey", $"c_acctbal")
-    val keyStats = cust.groupBy($"c_mktsegment")
-      .agg(count(lit(1)).as("n"),
-        min($"c_acctbal").as("v_lo"), max($"c_acctbal").as("v_hi"))
-      .select($"c_mktsegment", $"n", $"v_lo", $"v_hi",
-        greatest(lit(NtileMinShardsPerKey),
-          expr(s"(n + ${rowsPerShard - 1}) div $rowsPerShard")).as("nb"))
-    val bucketed = cust.join(broadcast(keyStats), "c_mktsegment")
-      .withColumn("bucket",
-        when($"v_hi" === $"v_lo", lit(0L)).otherwise(
-          least($"nb" - 1,
-            floor(($"c_acctbal" - $"v_lo").cast("double") /
-              ($"v_hi" - $"v_lo").cast("double") * $"nb").cast("long"))))
+    val (bucketed, carry) = RangeShards.rangeSharded(cust, "c_mktsegment",
+      "c_acctbal", descending = false, rowsPerShard)
     // default frame of an ordered window = RANGE unbounded → current
     // row: the count includes every peer of the current balance
     val wLoc = Window.partitionBy($"c_mktsegment", $"bucket")
       .orderBy($"c_acctbal")
-    val wPrev = Window.partitionBy($"c_mktsegment").orderBy($"bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = bucketed.groupBy($"c_mktsegment", $"bucket")
-      .agg(count(lit(1)).as("cb"))
-      .withColumn("off", coalesce(sum($"cb").over(wPrev), lit(0L)))
-      .select($"c_mktsegment", $"bucket", $"off")
     bucketed
       .withColumn("le_loc", count(lit(1)).over(wLoc))
       .join(broadcast(carry), Seq("c_mktsegment", "bucket"))

@@ -2,9 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Regenerates the committed golden fixtures (test-scope tool, like
-  * [[DevProbe]] — never part of the shipped library). Run after an
-  * INTENDED change to a pinned model query, review the diff, commit:
+/** Regenerates the committed golden fixtures (test-scope tool — never
+  * part of the shipped library). Run after an INTENDED change to a
+  * pinned model query, review the diff, commit:
   *
   *   sbt "Test/runMain graft.GoldenGen"
   *
